@@ -54,8 +54,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Probe cadence for calibration_series. 10 matches the hunt tool whose
-# data motivated the series (tools/driver_sequence_hunt.py PROBE_EVERY).
+# Probe cadence for calibration_series: one fixed probe every 10 queries,
+# dense enough to bracket a host stall to a window of a few rows.
 PROBE_EVERY = 10
 
 HEADLINE = [

@@ -70,29 +70,6 @@ def minhash_signatures(
     return per_hash.groupBy(id_col, "pos").agg(F.min("h").alias("mh"))
 
 
-def minhash_bands(sig: DataFrame, id_col: str, band_size: int = 2) -> DataFrame:
-    """(id, band, band_key): LSH band table from per-position signatures.
-
-    Band key = ordered concat of the band's MinHash components — the
-    equi-join key that replaces any all-pairs comparison. This is also
-    the RELATION a materialized dedup index persists
-    (sources/dedup_index.py): corpus membership lives here, so a new
-    batch probes bands instead of re-sharding the corpus text.
-
-    Pipelines that ALSO need the per-doc signature array should derive
-    bands from it with ``bands_from_sig_array`` instead (r16): this
-    form re-aggregates the (id, pos, mh) relation — a second exchange
-    and, when the sig subtree is not reused, a second shingle+hash
-    pass over the corpus.
-    """
-    return sig.withColumn("band", F.expr(f"pos div {band_size}")).groupBy(id_col, "band").agg(
-        F.array_join(
-            F.transform(F.array_sort(F.collect_list(F.struct("pos", "mh"))), lambda x: x["mh"].cast("string")),
-            ",",
-        ).alias("band_key")
-    )
-
-
 def minhash_sig_array(sig: DataFrame, id_col: str) -> DataFrame:
     """(id, sig array<long>): per-doc signature vector, pos-ordered."""
     return sig.groupBy(id_col).agg(
@@ -105,18 +82,18 @@ def minhash_sig_array(sig: DataFrame, id_col: str) -> DataFrame:
 def bands_from_sig_array(
     sigarr: DataFrame, id_col: str, num_hashes: int, band_size: int = 2
 ) -> DataFrame:
-    """(id, band, band_key) derived MAP-SIDE from the signature array —
-    relation-equal to ``minhash_bands`` (band = pos div band_size as
-    BIGINT, band_key = comma-joined mh strings in pos order; a trailing
-    short band when band_size doesn't divide num_hashes slices exactly
-    like the div grouping), but with zero additional shuffles: one
-    explode over ceil(num_hashes/band_size) per-band structs. Every
-    signature array has exactly num_hashes entries (minhash_signatures
-    emits all positions for any doc with >= 1 shingle), so the slice
-    bounds are static. r16 optimization: pipelines needing bands AND
-    sig arrays previously aggregated the (id, pos, mh) relation twice
-    on different keys — two exchanges, and a duplicated shingle+hash
-    corpus pass wherever exchange reuse didn't fire."""
+    """(id, band, band_key): the LSH band table, derived MAP-SIDE from
+    the signature array. Band ``b`` (BIGINT) covers signature positions
+    ``pos div band_size == b``; ``band_key`` is their mh values as
+    strings, comma-joined in pos order (a trailing short band when
+    band_size doesn't divide num_hashes). The band key is the
+    equi-join key that replaces any all-pairs comparison, and the
+    relation a materialized dedup index persists
+    (sources/dedup_index.py). Zero shuffles beyond the signature
+    array's: one explode over ceil(num_hashes/band_size) per-band
+    structs. Every signature array has exactly num_hashes entries
+    (minhash_signatures emits all positions for any doc with >= 1
+    shingle), so the slice bounds are static."""
     n_bands = -(-num_hashes // band_size)
     per_band = F.transform(
         F.sequence(F.lit(0), F.lit(n_bands - 1)),
@@ -139,21 +116,6 @@ def bands_from_sig_array(
         id_col,
         F.nullif(F.col("__b.band"), F.lit(-1).cast("long")).alias("band"),
         F.col("__b.band_key").alias("band_key"),
-    )
-
-
-def minhash_band_candidates(
-    sig: DataFrame, id_col: str, band_size: int = 2
-) -> DataFrame:
-    """Candidate pairs (id_a < id_b) sharing at least one LSH band."""
-    bands = minhash_bands(sig, id_col, band_size)
-    a = bands.select(F.col(id_col).alias("id_a"), "band", "band_key")
-    b = bands.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
     )
 
 

@@ -1172,10 +1172,11 @@ def streaming_cdc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per micro-batch the work is |batch changes| + |rollup|
     rows; the snapshot the feed describes is never read.
 
-    (r16: land_chunked_feed now refuses out-of-range __chunk rows
-    instead of silently dropping them; landed bytes unchanged —
-    parity-test pinned. This note re-tiers the query into the driver
-    sweep, since helper edits don't change its source hash.)
+    Feed and commit contract: ``land_chunked_feed`` lands all three
+    chunks or, on a ``__chunk`` outside [0, 3), none; each epoch folds
+    through the shared epoch-tagged snapshot commit
+    (``streaming/pipeline._fold_snapshot``), so a replayed epoch is a
+    no-op.
     """
     import tempfile
 
@@ -1307,12 +1308,10 @@ def streaming_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     index joins are bounded equi-joins (batch side broadcast by AQE);
     corpus text is never re-hashed. The streamed feed is tiny here by
     construction — the plan shape, not the volume, is what carries to
-    100 TB (same as the other streaming twins). r15 optimization:
-    ``stream_minhash_ingest`` now spreads an under-parallel micro-batch
-    to defaultParallelism before the hash pass (a 1-file trigger
-    otherwise shingles the whole batch on ONE scan task — guide §2.5);
-    the 550-doc epoch's decision pass measured 4.2-4.3 s → 1.2-1.5 s
-    at sf0.1, whole drive 6.4-7.0 s → 3.6-4.0 s.
+    100 TB (same as the other streaming twins).
+    ``stream_minhash_ingest`` spreads an under-parallel micro-batch to
+    defaultParallelism before the hash pass (a 1-file trigger
+    otherwise shingles the whole batch on ONE scan task — guide §2.5).
 
     Drive cost (r11 protocol trim, the left-outer-join precedent): the
     two feed files land DRIVER-SIDE with pyarrow (a column-pruned,
@@ -1323,10 +1322,13 @@ def streaming_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are pure per-epoch protocol; r16 measured 4 partitions
     FLAT — the per-epoch floor is the landing protocol's job/write
     count, OPTIMIZATION_r16.md). Results are partitioning-invariant
-    (pinned catalog-wide). (r16: the per-batch hash tables derive
-    bands from the signature array and the spread probe reads the
-    persisted batch; this note re-tiers the query into the driver
-    sweep — helper edits don't change its source hash.)
+    (pinned catalog-wide).
+
+    Commit contract: each epoch's admission decisions, accepted rows
+    and index bands/signatures land through the shared exactly-once
+    append (``sources/localfs.append_exactly_once``); decisions are
+    made after its purge, so a replayed epoch re-decides against the
+    committed index and never duplicates index rows.
     """
     import os
     import tempfile
@@ -1408,10 +1410,11 @@ def streaming_cdc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per micro-batch the work is |batch changes| + |support|
     rows; the snapshot the feed describes is never read.
-    (r16: land_chunked_feed now refuses out-of-range __chunk rows
-    instead of silently dropping them; landed bytes unchanged —
-    parity-test pinned. This note re-tiers the query into the driver
-    sweep, since helper edits don't change its source hash.)
+    Feed and commit contract: ``land_chunked_feed`` lands all three
+    chunks or, on a ``__chunk`` outside [0, 3), none; each epoch folds
+    through the shared epoch-tagged snapshot commit
+    (``streaming/pipeline._fold_snapshot``), so a replayed epoch is a
+    no-op.
     """
     import tempfile
 
@@ -1496,10 +1499,11 @@ def streaming_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per micro-batch the store shuffle is vocabulary-sized
     (Heaps' law), never corpus-sized; the midpoint is ONE 1-row
     collect (the bounded params-collect convention).
-    (r16: land_chunked_feed now refuses out-of-range __chunk rows
-    instead of silently dropping them; landed bytes unchanged —
-    parity-test pinned. This note re-tiers the query into the driver
-    sweep, since helper edits don't change its source hash.)
+    Feed and commit contract: ``land_chunked_feed`` lands all three
+    chunks or, on a ``__chunk`` outside [0, 3), none; each epoch folds
+    through the shared epoch-tagged snapshot commit
+    (``streaming/pipeline._fold_snapshot``), so a replayed epoch is a
+    no-op.
     """
     import tempfile
 

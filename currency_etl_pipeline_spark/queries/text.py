@@ -285,8 +285,8 @@ def _jaccard_pairs(
     threshold. Both ``near_dup_jaccard_pairs`` and ``dedup_clusters``
     derive from this, so the threshold and the plan shape can never
     silently diverge between them. ``base`` overrides the (doc_id, sh)
-    corpus relation (dedup_recall_report's shared-scan contract —
-    see _recall_base)."""
+    corpus relation (dedup_recall_report's shared-scan contract — see
+    the ``base`` it builds)."""
     return _shingle_pair_counts(spark, sf_dir, base=base).filter(_jaccard_expr() >= threshold)
 
 
@@ -442,7 +442,7 @@ def _minhash_lsh_pairs(
 ) -> DataFrame:
     """The registered minhash_lsh_near_dup pipeline, parameterized on
     the (doc_id, sh) corpus relation so dedup_recall_report can feed
-    the SHARED scan (see _recall_base) — the operator logic downstream
+    the SHARED scan (its ``base``) — the operator logic downstream
     of the shingle projection is this one code path either way."""
     from currency_etl_pipeline_spark.operators.dedup import minhash_near_dup_pairs
 
@@ -539,7 +539,7 @@ def _simhash_verified_pairs(
 ) -> DataFrame:
     """The registered simhash_near_dup pipeline, parameterized on the
     (doc_id, text, sh) corpus relation so dedup_recall_report can feed
-    the SHARED scan (see _recall_base); the fingerprint (tokens) and
+    the SHARED scan (its ``base``); the fingerprint (tokens) and
     the verify (shingles) both derive from the same base either way."""
     from currency_etl_pipeline_spark.operators.dedup import (
         jaccard_verify_pairs,
@@ -1746,7 +1746,7 @@ def _containment_pairs(
 ) -> DataFrame:
     """The registered doc_containment_pairs pipeline, parameterized on
     the (doc_id, sh) corpus relation (dedup_recall_report's shared-scan
-    contract — see _recall_base)."""
+    contract — see the ``base`` it builds)."""
     small_first = F.col("n_b") < F.col("n_a")
     contain = F.col("n_common") * 1.0 / F.least(F.col("n_a"), F.col("n_b"))
     return (
@@ -1974,7 +1974,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan + re-shingle the corpus independently — three shingle
     projections and a token pass over four parquet scans for ONE
     report. The corpus (doc_id, text, shingles) is now materialized
-    ONCE (_recall_base: one scan, one shingle pass, localCheckpointed)
+    ONCE (``base`` below: one scan, one shingle pass, localCheckpointed)
     and fed to each graded pipeline through its base parameter. What
     the report grades is unchanged: the "grades the registered
     operator" property protects each method's LOGIC (the band/verify/

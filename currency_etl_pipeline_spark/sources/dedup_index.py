@@ -76,14 +76,13 @@ def doc_signature_tables(
     persisted relations, also usable in-plan (the filesystem-free
     catalog twin goes through this exact code path).
 
-    r16: bands derive map-side from the signature array
-    (operators/dedup.bands_from_sig_array — relation-equal to the old
-    minhash_bands re-aggregation, band stays BIGINT so persisted index
-    schemas are unchanged). The two returned relations now share ONE
-    shingle+hash+aggregate subtree: plans consuming both get a
-    ReusedExchange where they previously planned the corpus pass twice
-    — per indexed side that's half the hash CPU and one fewer
-    exchange at any scale."""
+    Band ``b`` (BIGINT) of a doc is signature positions
+    ``[b·band_size, (b+1)·band_size)``, its ``band_key`` their MinHash
+    values comma-joined in position order; bands derive map-side from
+    the signature array (operators/dedup.bands_from_sig_array), so the
+    two returned relations share ONE shingle+hash+aggregate subtree and
+    plans consuming both reuse its exchange instead of planning the
+    corpus pass twice."""
     shingled = exploded(
         docs.select("doc_id", shingles().alias("sh")), ["doc_id"], F.col("sh"), "shingle"
     )
@@ -159,7 +158,6 @@ def append_minhash_index(
     spark: SparkSession,
     index_path: str,
     new_docs: DataFrame,
-    batch_tables: tuple[DataFrame, DataFrame] | None = None,
 ) -> None:
     """Admit a batch into the corpus: hash it with the INDEX's stored
     parameters and append its bands/signatures — one pass over the new
@@ -167,18 +165,9 @@ def append_minhash_index(
     is relation-equal to a full rebuild over corpus∪batch (pinned in
     tests/test_incremental.py), because the hash pipeline is a pure
     function of (text, params). ``new_docs`` doc_ids must be new —
-    id-level upsert is the warehouse family's job.
-
-    ``batch_tables`` lets a caller that already shingled the batch
-    (the streaming admission gate evaluates the same (bands, sigs)
-    twice for its probe + within-batch check) pass its persisted
-    relations instead of re-hashing the text a third time — byte-equal
-    by the same pure-function argument, since the caller derives them
-    from the identical (text, params)."""
+    id-level upsert is the warehouse family's job."""
     p = load_index_params(index_path)
-    bands, sigs = batch_tables or doc_signature_tables(
-        new_docs, p["num_hashes"], p["band_size"]
-    )
+    bands, sigs = doc_signature_tables(new_docs, p["num_hashes"], p["band_size"])
     bands.write.mode("append").parquet(os.path.join(index_path, "bands"))
     sigs.write.mode("append").parquet(os.path.join(index_path, "sigs"))
 

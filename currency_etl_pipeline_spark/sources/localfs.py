@@ -5,10 +5,11 @@ Every store that pairs distributed parquet relations (Spark IO — happy
 on any Hadoop filesystem) with driver-side filesystem operations
 funnels them through :func:`sidecar_fs`: SnapshotStore's ``_LATEST``
 pointer and ``_TAG`` markers, the MinHash index's ``_params.json`` and
-tombstone probes, the streaming ``_last_epoch`` replay markers, AND
-(r8, second pass) the directory-swap maintenance machinery — warehouse
-partition compaction/RTBF rewrites, MinHash tombstone compaction, IVF
-cell swaps and reclusters. Through round 7 all of this was raw
+tombstone probes, the ``_commits/`` markers of the exactly-once index
+append (:func:`append_exactly_once`), AND (r8, second pass) the
+directory-swap maintenance machinery — warehouse partition
+compaction/RTBF rewrites, MinHash tombstone compaction, IVF cell swaps
+and reclusters. Through round 7 all of this was raw
 ``open``/``os.replace``/``shutil`` guarded by a fail-loud URI check;
 the 100 TB deployment the module docs name lives on HDFS-like or
 object storage, so r8 flips the guard into a dispatch (VERDICT r7
@@ -251,3 +252,82 @@ def sidecar_fs(path: str, spark=None):
                 "Hadoop filesystem — no active SparkSession to reach it"
             )
     return _HadoopSidecarFS(spark, path)
+
+
+def _visible(names: list[str]) -> list[str]:
+    """Entries Spark's parquet reader sees (not ``_``/``.``-hidden)."""
+    return [n for n in names if not n.startswith(("_", "."))]
+
+
+def append_exactly_once(spark, index_path: str, token: str, write_stage) -> bool:
+    """Append one logical batch to a directory index EXACTLY once under
+    at-least-once execution — the one commit protocol behind the IVF
+    append, the SemDeDup admission and the streaming MinHash admission.
+
+    ``token`` names the batch: every retry of the same logical batch
+    must pass the same token (streaming callers pass
+    ``<checkpoint-ns>-<epoch>``). ``write_stage(stage)`` builds the
+    batch's rows and writes them under ``stage``, one subdirectory per
+    index subdirectory it appends to (``cid=*`` partitions for IVF and
+    SemDeDup, ``bands/`` and ``sigs/`` for MinHash). Single committer
+    per token namespace:
+
+    1. **Probe**: ``_commits/<token>`` exists → the batch landed in
+       full; return False and touch nothing.
+    2. **Purge**: delete every ``epoch-<token>-*`` file a crashed prior
+       attempt left in the index's visible subdirectories, and its
+       stale stage. Listing is bounded by |subdirs| + |their files|,
+       driver-side names only.
+    3. **Stage**: ``write_stage`` runs only now, AFTER the purge, so
+       rows that depend on index state (admission decisions) are
+       decided against the clean committed state and a replay
+       reproduces them. The stage dir is ``_``-hidden from index scans.
+    4. **Install**: rename every staged part file of every visible
+       stage subdirectory to the DETERMINISTIC name
+       ``<subdir>/epoch-<token>-<i>.parquet`` — per-file renames, no
+       directory swap; determinism plus the purge make a half-installed
+       crash converge on replay.
+    5. **Commit**: create the marker with :meth:`create_exclusive`
+       (POSIX O_EXCL / Hadoop ``create(overwrite=False)``, a GCS
+       ifGenerationMatch=0 conditional insert). A lost race means a
+       concurrent committer of the SAME token installed the same
+       names; the state is consistent either way.
+
+    A crash anywhere before 5 makes the replay purge and reinstall; a
+    crash after it makes the replay a no-op at 1. On object stores 4 is
+    copy+delete per staged file (O(batch), not O(index)); the protocol
+    needs an atomic create, never an atomic rename. Returns True if
+    this call landed the batch.
+
+    Marker retention: keep a marker while its checkpoint can still
+    replay that epoch. Compaction and recluster rename the installed
+    files, so after either one a pruned token's replay finds nothing
+    to purge and appends its rows a second time.
+
+    Token namespace: epoch ids restart at 0 under a fresh checkpoint,
+    and its tokens are a fresh namespace, so a fresh checkpoint needs a
+    fresh index path (the same contract as the epoch-tagged snapshot
+    folds in streaming/pipeline.py).
+    """
+    fs = sidecar_fs(index_path, spark)
+    marker = f"{index_path}/_commits/{token}"
+    if fs.exists(marker):
+        return False
+    prefix = f"epoch-{token}-"
+    stage = f"{index_path}/_stage_{token}"
+    for d in _visible(fs.list_names(index_path)):
+        for f in fs.list_names(f"{index_path}/{d}"):
+            if f.startswith(prefix):
+                fs.delete(f"{index_path}/{d}/{f}")
+    fs.delete(stage)
+    write_stage(stage)
+    i = 0
+    for d in _visible(fs.list_names(stage)):
+        fs.mkdirs(f"{index_path}/{d}")
+        for f in _visible(fs.list_names(f"{stage}/{d}")):
+            fs.rename(f"{stage}/{d}/{f}", f"{index_path}/{d}/{prefix}{i}.parquet")
+            i += 1
+    fs.delete(stage)
+    fs.mkdirs(f"{index_path}/_commits")
+    fs.create_exclusive(marker, "")
+    return True

@@ -364,6 +364,12 @@ def _admission_report(
     )
 
 
+def _admitted_rows(report: DataFrame) -> DataFrame:
+    return report.filter(F.col("admitted")).select(
+        "vec_id", "label", "qv", "nrm", "seq", "cid"
+    )
+
+
 def admit_semdedup_batch(
     spark: SparkSession,
     index_path: str,
@@ -386,9 +392,7 @@ def admit_semdedup_batch(
     """
     report = _admission_report(spark, index_path, batch_vectors)
     if write:
-        report.filter(F.col("admitted")).select(
-            "vec_id", "label", "qv", "nrm", "seq", "cid"
-        ).write.mode("append").partitionBy("cid").parquet(index_path)
+        _admitted_rows(report).write.mode("append").partitionBy("cid").parquet(index_path)
     return report.select("vec_id", "cid", "corpus_blocked", "admitted")
 
 
@@ -396,38 +400,22 @@ def admit_semdedup_batch_exactly_once(
     spark: SparkSession, index_path: str, batch_vectors: DataFrame, token: str
 ) -> bool:
     """``admit_semdedup_batch`` with an EXACTLY-ONCE end state under
-    at-least-once execution — the ann_index commit protocol (probe →
-    purge → stage → deterministic-name install → conditional-create
-    marker), with one extra obligation the IVF append doesn't have:
-    admission DECISIONS depend on index state, so they are computed
-    only AFTER the purge — a replay of a crashed attempt decides
-    against the clean committed state and therefore reproduces the
-    same admitted set (the staging-determinism contract). Crash before
-    the marker → replay purges and reinstalls; crash after → replay
-    no-ops at the probe. Returns True if this call landed the batch.
-
-    Rejected rows are decisions, not files — a replayed epoch re-makes
-    them identically; only admitted rows need the install protocol.
+    at-least-once execution, through
+    ``sources/localfs.append_exactly_once``. Admission DECISIONS depend
+    on index state, so they are computed inside the stage step, AFTER
+    the protocol's purge: a replay of a crashed attempt decides against
+    the clean committed state and reproduces the same admitted set.
+    Rejected rows are decisions, not files — only admitted rows are
+    staged and installed. Returns True if this call landed the batch.
     """
-    from currency_etl_pipeline_spark.sources.ann_index import (
-        install_staged_cells,
-        purge_token_files,
-    )
-    from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
+    from currency_etl_pipeline_spark.sources.localfs import append_exactly_once
 
-    fs = sidecar_fs(index_path, spark)
-    commits_dir = f"{index_path}/_commits"
-    marker = f"{commits_dir}/{token}"
-    if fs.exists(marker):
-        return False
-    prefix = f"epoch-{token}-"
-    purge_token_files(fs, index_path, prefix)
-    report = _admission_report(spark, index_path, batch_vectors)
-    stage = f"{index_path}/_stage_{token}"
-    report.filter(F.col("admitted")).select(
-        "vec_id", "label", "qv", "nrm", "seq", "cid"
-    ).write.mode("overwrite").partitionBy("cid").parquet(stage)
-    install_staged_cells(fs, index_path, stage, prefix)
-    fs.mkdirs(commits_dir)
-    fs.create_exclusive(marker, "")
-    return True
+    return append_exactly_once(
+        spark,
+        index_path,
+        token,
+        lambda stage: _admitted_rows(_admission_report(spark, index_path, batch_vectors))
+        .write.mode("overwrite")
+        .partitionBy("cid")
+        .parquet(stage),
+    )

@@ -1172,20 +1172,6 @@ def test_minhash_index_sidecars_on_hadoop_file_scheme(spark, tmp_path):
     assert query_minhash_index(spark, uri, probe, min_est_jaccard=0.9).isEmpty()
 
 
-def test_last_epoch_marker_on_hadoop_file_scheme(spark, tmp_path):
-    """The streaming replay marker closures over a ``file://`` index
-    path: fresh marker reads -1, record/read round-trips, re-record
-    overwrites atomically."""
-    from currency_etl_pipeline_spark.streaming.pipeline import _last_epoch_marker
-
-    last, record = _last_epoch_marker(spark, f"file://{tmp_path}")
-    assert last() == -1
-    record(3)
-    assert last() == 3
-    record(7)
-    assert last() == 7
-
-
 def test_snapshot_store_cas_commit(spark, tmp_path):
     """r9 (localfs caveat -> feature): commit(expect_version=N) is a
     compare-and-set — it installs exactly N+1 or raises

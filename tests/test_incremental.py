@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from currency_etl_pipeline_spark.operators.incremental import (
@@ -1324,6 +1326,268 @@ def test_create_exclusive_posix_and_hadoop(spark, tmp_path):
     assert hfs.create_exclusive(m, "one") is True
     assert hfs.create_exclusive(m, "two") is False
     assert hfs.read_text(m) == "one"
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+_FAULT_POINTS = ("after_purge", "after_stage", "after_first_rename", "before_marker")
+
+
+def _arm_fault(monkeypatch, point):
+    """Make the next ``append_exactly_once`` commit raise ``_Crash`` at
+    ``point``: before the stage write (the purge is done), before the
+    install (the stage is written), right after the first install
+    rename, or before the marker create."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from currency_etl_pipeline_spark.sources import localfs
+
+    if point == "after_purge":
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            if "/_stage_" in str(path):
+                raise _Crash(point)
+            return real_parquet(self, path, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        return
+
+    class _FaultyFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def list_names(self, path):
+            if point == "after_stage" and str(path).rsplit("/", 1)[-1].startswith("_stage_"):
+                raise _Crash(point)
+            return self._fs.list_names(path)
+
+        def rename(self, src, dst):
+            self._fs.rename(src, dst)
+            if point == "after_first_rename":
+                raise _Crash(point)
+
+        def create_exclusive(self, path, text=""):
+            if point == "before_marker":
+                raise _Crash(point)
+            return self._fs.create_exclusive(path, text)
+
+    real_fs = localfs.sidecar_fs
+    monkeypatch.setattr(
+        localfs, "sidecar_fs", lambda path, spark=None: _FaultyFS(real_fs(path, spark))
+    )
+
+
+def _stage_dirs(path):
+    import os
+
+    return [d for d in os.listdir(path) if d.startswith("_stage_")]
+
+
+def _crash_replay_vector_append(spark, monkeypatch, point, append, build, index_dir):
+    """Crash ``append(index, token)`` at ``point``, replay the same
+    token, and return the replayed index rows next to a clean single
+    run's; a third call must be a no-op."""
+    clean, eo = f"{index_dir}_clean", f"{index_dir}_eo"
+    build(clean)
+    assert append(clean, "ns1-0") is True
+    build(eo)
+    _arm_fault(monkeypatch, point)
+    with pytest.raises(_Crash):
+        append(eo, "ns1-0")
+    monkeypatch.undo()
+    assert append(eo, "ns1-0") is True
+    rows = lambda p: sorted(map(repr, spark.read.parquet(p).collect()))  # noqa: E731
+    got = rows(eo)
+    assert append(eo, "ns1-0") is False
+    assert rows(eo) == got
+    return got, rows(clean)
+
+
+@pytest.mark.parametrize("point", _FAULT_POINTS)
+def test_ivf_append_converges_after_crash(spark, sf_dir, tmp_path, monkeypatch, point):
+    """append_ivf_index_exactly_once: a crash at any step of the shared
+    commit, replayed under the same token, leaves the index rows of a
+    clean single run; a third call returns False."""
+    from currency_etl_pipeline_spark.queries.vectors import _vecs
+    from currency_etl_pipeline_spark.sources.ann_index import (
+        append_ivf_index_exactly_once,
+        build_ivf_index,
+    )
+
+    v = _vecs(spark, sf_dir)
+    head, tail = v.filter(F.col("vec_id") < _SPLIT), v.filter(F.col("vec_id") >= _SPLIT)
+    got, want = _crash_replay_vector_append(
+        spark,
+        monkeypatch,
+        point,
+        lambda p, t: append_ivf_index_exactly_once(spark, p, tail, token=t),
+        lambda p: build_ivf_index(spark, sf_dir, p, CENTROID_IDS, vectors=head),
+        str(tmp_path / "ivf"),
+    )
+    assert got == want, f"replay after a crash {point} duplicated or lost rows"
+    assert not _stage_dirs(tmp_path / "ivf_eo")
+
+
+def test_ivf_append_converges_after_crash_on_hadoop_file_scheme(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The shared commit's crash recovery through the JVM Hadoop
+    filesystem branch: a ``file://`` index crashed right after its
+    first install rename converges on replay (purge, reinstall,
+    marker via ``create(overwrite=False)``)."""
+    from currency_etl_pipeline_spark.queries.vectors import _vecs
+    from currency_etl_pipeline_spark.sources.ann_index import (
+        append_ivf_index_exactly_once,
+        build_ivf_index,
+    )
+
+    v = _vecs(spark, sf_dir)
+    head, tail = v.filter(F.col("vec_id") < _SPLIT), v.filter(F.col("vec_id") >= _SPLIT)
+    got, want = _crash_replay_vector_append(
+        spark,
+        monkeypatch,
+        "after_first_rename",
+        lambda p, t: append_ivf_index_exactly_once(spark, p, tail, token=t),
+        lambda p: build_ivf_index(spark, sf_dir, p, CENTROID_IDS, vectors=head),
+        f"file://{tmp_path}/ivf",
+    )
+    assert got == want, "file:// replay after a crash duplicated or lost rows"
+    assert not _stage_dirs(tmp_path / "ivf_eo")
+
+
+@pytest.mark.parametrize("point", _FAULT_POINTS)
+def test_semdedup_admit_converges_after_crash(spark, sf_dir, tmp_path, monkeypatch, point):
+    """admit_semdedup_batch_exactly_once: a crash at any step of the
+    shared commit, replayed under the same token, re-decides against
+    the purged index and leaves the kept rows of a clean single run;
+    a third call returns False."""
+    from currency_etl_pipeline_spark.queries.vectors import _vecs
+    from currency_etl_pipeline_spark.sources.semdedup_index import (
+        admit_semdedup_batch_exactly_once,
+        build_semdedup_index,
+    )
+
+    v = _vecs(spark, sf_dir)
+    head, tail = v.filter(F.col("vec_id") < _SPLIT), v.filter(F.col("vec_id") >= _SPLIT)
+    got, want = _crash_replay_vector_append(
+        spark,
+        monkeypatch,
+        point,
+        lambda p, t: admit_semdedup_batch_exactly_once(spark, p, tail, token=t),
+        lambda p: build_semdedup_index(spark, sf_dir, p, CENTROID_IDS, vectors=head),
+        str(tmp_path / "sem"),
+    )
+    assert got == want, f"replay after a crash {point} duplicated or lost rows"
+    assert not _stage_dirs(tmp_path / "sem_eo")
+
+
+@pytest.mark.parametrize("point", _FAULT_POINTS)
+def test_minhash_ingest_converges_after_crash(spark, tmp_path, monkeypatch, point):
+    """stream_minhash_ingest: an epoch crashed at any step of the shared
+    commit is replayed by the restarted stream under the same token;
+    the index's bands/sigs and the accepted epoch dir equal a clean
+    single run's, and a third delivery of the epoch (its checkpoint
+    commit removed) returns False. Before the shared commit, a crash
+    before the replay marker appended the epoch's index rows twice."""
+    import os
+
+    from currency_etl_pipeline_spark.sources import localfs
+    from currency_etl_pipeline_spark.sources.dedup_index import build_minhash_index
+    from currency_etl_pipeline_spark.streaming.pipeline import stream_minhash_ingest
+
+    base = (
+        "the quick brown fox jumps over the lazy dog while the band plays on "
+        "and the crowd cheers loudly for more music tonight"
+    )
+    novel = (
+        "completely different subject matter about distributed query engines "
+        "processing petabytes of columnar data with vectorized execution"
+    )
+    schema = "doc_id bigint, text string"
+    corpus = spark.createDataFrame([(0, base)], schema)
+    feed = tmp_path / "feed"
+    spark.createDataFrame(
+        [(1, base + " extra"), (2, novel), (3, novel + " extra")], schema
+    ).repartition(1).write.parquet(str(feed / "b0"))
+
+    def drive(name):
+        stream = spark.readStream.schema(schema).parquet(str(feed) + "/*")
+        stream_minhash_ingest(
+            spark,
+            stream,
+            str(tmp_path / f"{name}_idx"),
+            str(tmp_path / f"{name}_acc"),
+            0.5,
+            checkpoint_dir=str(tmp_path / f"{name}_ck"),
+        ).awaitTermination()
+
+    def state(name):
+        def rows(p):
+            return sorted(map(repr, spark.read.parquet(str(tmp_path / p)).collect()))
+
+        return (
+            rows(f"{name}_idx/bands"),
+            rows(f"{name}_idx/sigs"),
+            rows(f"{name}_acc/epoch=0"),
+        )
+
+    for name in ("clean", "eo"):
+        build_minhash_index(spark, corpus, str(tmp_path / f"{name}_idx"))
+    drive("clean")
+    want = state("clean")
+    # doc 1 near-dups the corpus, doc 3 near-dups doc 2: only doc 2
+    # is admitted, and its 4 bands join the corpus doc's 4.
+    assert len(want[2]) == 1 and len(want[0]) == 8, want
+
+    _arm_fault(monkeypatch, point)
+    with pytest.raises(Exception, match=point):  # the stream wraps _Crash
+        drive("eo")
+    monkeypatch.undo()
+    drive("eo")
+    assert state("eo") == want, f"replay after a crash {point} diverged from a clean run"
+    assert not _stage_dirs(tmp_path / "eo_idx")
+
+    results = []
+    real = localfs.append_exactly_once
+
+    def spy(*args, **kwargs):
+        results.append(real(*args, **kwargs))
+        return results[-1]
+
+    monkeypatch.setattr(localfs, "append_exactly_once", spy)
+    for f in ("0", ".0.crc"):
+        os.remove(tmp_path / "eo_ck" / "commits" / f)
+    drive("eo")
+    assert results == [False]
+    assert state("eo") == want
+
+
+def test_recluster_keeps_commit_markers(spark, sf_dir, tmp_path):
+    """recluster_ivf_index renames every installed file, so it must
+    carry ``_commits/`` across its directory swap: a committed token
+    replayed after the recluster stays a no-op."""
+    from currency_etl_pipeline_spark.queries.vectors import _vecs
+    from currency_etl_pipeline_spark.sources.ann_index import (
+        append_ivf_index_exactly_once,
+        build_ivf_index,
+        recluster_ivf_index,
+    )
+
+    v = _vecs(spark, sf_dir)
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(spark, sf_dir, idx, CENTROID_IDS, vectors=v.filter(F.col("vec_id") < _SPLIT))
+    tail = v.filter(F.col("vec_id") >= _SPLIT)
+    assert append_ivf_index_exactly_once(spark, idx, tail, token="ns1-0") is True
+    recluster_ivf_index(spark, idx, k=4)
+    n = spark.read.parquet(idx).count()
+    assert append_ivf_index_exactly_once(spark, idx, tail, token="ns1-0") is False
+    assert spark.read.parquet(idx).count() == n == v.count()
 
 
 def test_ivfpq_full_probe_equals_in_plan_pq(spark, sf_dir, tmp_path):

@@ -787,7 +787,7 @@ def test_stream_append_ivf_index_matches_batch_build(spark, sf_dir, tmp_path):
     """A vector stream consumed by stream_append_ivf_index must leave
     the materialized index search-identical to a one-shot batch build
     over the same corpus, and a replayed epoch must be a no-op (the
-    _last_epoch marker protocol)."""
+    exactly-once commit markers)."""
     import os
 
     from currency_etl_pipeline_spark.queries.vectors import _vecs
@@ -1001,7 +1001,7 @@ def test_stream_minhash_ingest_exact_chains_mode(spark, tmp_path):
 
 def test_stream_append_ivf_index_on_hadoop_file_scheme(spark, sf_dir, tmp_path):
     """Streaming IVF maintenance against a ``file://`` index path: the
-    _last_epoch replay marker, the append, and a post-stream compaction
+    commit-marker probe, the append, and a post-stream compaction
     all ride the JVM Hadoop branch — the full streaming-ingest loop
     works without a POSIX index path (VERDICT r7 task 3, closing the
     streaming corner)."""
@@ -1042,7 +1042,7 @@ def test_stream_append_ivf_index_on_hadoop_file_scheme(spark, sf_dir, tmp_path):
         )
 
     assert rows(live) == rows(full), "file:// streamed index diverged from batch build"
-    # replay against the marker (read through the Hadoop branch) no-ops
+    # replay against the commit markers (read through the Hadoop branch) no-ops
     files_before = set(spark.read.parquet(live).inputFiles())
     q2 = stream_append_ivf_index(
         spark,
@@ -1150,7 +1150,7 @@ def test_stream_append_semdedup_index_matches_one_shot(spark, sf_dir, tmp_path):
     whole corpus (chunking cannot change sequential admissions — the
     greedy's prefix property, with earlier epochs' admissions blocking
     later epochs' duplicates), and a replayed feed must be a no-op
-    (the _last_epoch marker + commit-token protocol)."""
+    (the commit-token protocol)."""
     import os
 
     from currency_etl_pipeline_spark.queries.vectors import _vecs
@@ -1502,3 +1502,21 @@ def test_land_chunked_feed_rejects_out_of_range_chunks(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="outside"):
         land_chunked_feed(df, n_chunks=2, feed_dir=feed_dir)
+
+
+@pytest.mark.parametrize("bad_chunk", [3, None])
+def test_land_chunked_feed_refusal_is_atomic(spark, tmp_path, bad_chunk):
+    """A refused feed lands nothing: an out-of-range or NULL ``__chunk``
+    (the ``__HIVE_DEFAULT_PARTITION__`` dir) is detected before any
+    chunk is renamed into place, the stage is deleted, and the feed
+    dir holds no ``d<i>`` dirs a later drive could tail."""
+    import os
+
+    from currency_etl_pipeline_spark.streaming.pipeline import land_chunked_feed
+
+    feed_dir = str(tmp_path / "feed")
+    os.makedirs(feed_dir)
+    df = spark.createDataFrame([(1, 0), (2, 1), (3, bad_chunk)], "v int, __chunk int")
+    with pytest.raises(ValueError, match="outside"):
+        land_chunked_feed(df, n_chunks=2, feed_dir=feed_dir)
+    assert os.listdir(feed_dir) == []
