@@ -699,12 +699,10 @@ def centroid_drift_report(
 
 def delete_from_ivf_index(spark: SparkSession, index_path: str, vec_ids) -> int:
     """Right-to-be-forgotten for the vector index: remove ``vec_ids``
-    by rewriting ONLY the cell partitions that contain them — the same
-    partition-rewrite discipline as the warehouse's
-    ``delete_from_historical`` (tmp-dir rewrite, exact survivor-count
-    verification BEFORE the old directory is removed; a failed rewrite
-    never destroys data). Works on both the float and SQ8 layouts
-    (both carry vec_id).
+    by rewriting ONLY the cell partitions that contain them, each
+    through the verified rewrite ``localfs.install_verified`` documents
+    (exact survivor count, re-list guard). Works on both the float and
+    SQ8 layouts (both carry vec_id).
 
     Scale: locating the affected cells is one pushed-filter scan
     (``vec_id IN (...)`` literal — row-group stats skip most files);
@@ -712,11 +710,11 @@ def delete_from_ivf_index(spark: SparkSession, index_path: str, vec_ids) -> int:
     are bounded by construction (a deletion request list), so the
     driver-side cell list is a handful of ints. Returns rows removed.
     """
-    import os
+    from currency_etl_pipeline_spark.sources.localfs import (
+        install_verified,
+        stage_verified,
+    )
 
-    from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
-
-    fs = sidecar_fs(index_path, spark)
     ids = sorted(set(vec_ids))
     if not ids:
         return 0
@@ -732,21 +730,8 @@ def delete_from_ivf_index(spark: SparkSession, index_path: str, vec_ids) -> int:
         n_before = cell.count()
         survivors = cell.filter(~F.col("vec_id").isin(*ids))
         n_after = survivors.count()
-        # Leading underscore: Spark's path filter hides the staging dir
-        # from partition discovery, so a crash between the tmp write and
-        # the swap (or a concurrent whole-root reader) can never parse
-        # it as a cid value or double-read survivors (ADVICE r7 #2).
-        tmp = f"{index_path}/_delete_tmp_cid{cid}"
-        read_files = {os.path.basename(f) for f in cell.inputFiles()}
-        survivors.write.mode("overwrite").parquet(tmp)
-        n_written = spark.read.parquet(tmp).count()
-        if n_written != n_after:
-            fs.delete(tmp)
-            raise RuntimeError(
-                f"cell {cid} rewrite count mismatch ({n_after} -> {n_written}); "
-                "original partition left untouched"
-            )
-        _swap_cell_dir(fs, part_dir, tmp, read_files, cid, "RTBF delete")
+        stage = stage_verified(spark, part_dir, survivors.write.parquet, n_after)
+        install_verified(spark, part_dir, stage, cell.inputFiles())
         removed += n_before - n_after
     return removed
 
@@ -763,40 +748,24 @@ def compact_ivf_index(
     many-small-file reads — the same pathology
     ``Warehouse.compact_historical`` exists for, solved with the same
     discipline: per cell over the file budget, rewrite to
-    ``max_files_per_cell`` files via the underscore-hidden staging dir,
-    count-verify BEFORE removing the original, then swap. Skips cells
-    already within budget (idempotent). Returns cells compacted.
-
-    Concurrency: the cell read pins its file listing when the rewrite
-    plan executes, so a file appended between that listing and the
-    swap (a live ``stream_append_ivf_index``) would be deleted without
-    being part of the rewrite. The swap therefore RE-LISTS the cell
-    immediately before removal and aborts (staging dir discarded, cell
-    untouched) if the file set moved — and, like
-    ``Warehouse.compact_historical``, the supported pattern is still
-    to run compaction when the cell is cold / the stream is stopped;
-    the re-list guard narrows the race to microseconds, it does not
-    make concurrent writers safe.
-
-    Crash window: the rm→rename swap is NOT atomic. A crash after the
-    rmtree but before the rename leaves the cell ABSENT from the index
-    (searches silently skip it) with the data intact in the
-    underscore-hidden ``_compact_tmp_cid<cid>`` dir; recovery is to
-    rename that dir back to ``cid=<cid>`` (same recovery contract as
-    ``compact_historical``). A crash before the rmtree leaves the old
-    cell fully intact plus a stale staging dir that the next run
-    overwrites.
+    ``max_files_per_cell`` files through the verified rewrite
+    ``localfs.install_verified`` documents (count check, re-list guard
+    against a live ``stream_append_ivf_index``, crash states and
+    recovery). Run it when the cell is cold / the stream is stopped.
+    Skips cells already within budget (idempotent). Returns cells
+    compacted.
 
     Scale: cost is |oversized cells| × cell size — a maintenance pass
     over exactly the partitions the ingest fragmented, schedulable per
     cell. Works on both layouts (pure file-level rewrite).
     """
-    import os
     from collections import Counter
 
-    from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
+    from currency_etl_pipeline_spark.sources.localfs import (
+        install_verified,
+        stage_verified,
+    )
 
-    fs = sidecar_fs(index_path, spark)
     if max_files_per_cell < 1:
         raise ValueError(
             f"max_files_per_cell must be >= 1, got {max_files_per_cell}"
@@ -812,46 +781,11 @@ def compact_ivf_index(
             continue
         part_dir = f"{index_path}/cid={cid}"
         cell = spark.read.parquet(part_dir)
-        n_rows = cell.count()
-        read_files = {os.path.basename(f) for f in cell.inputFiles()}
-        tmp = f"{index_path}/_compact_tmp_cid{cid}"
-        cell.repartition(max_files_per_cell).write.mode("overwrite").parquet(tmp)
-        if spark.read.parquet(tmp).count() != n_rows:
-            fs.delete(tmp)
-            raise RuntimeError(
-                f"cell {cid} compaction count mismatch; original untouched"
-            )
-        _swap_cell_dir(fs, part_dir, tmp, read_files, cid, "compaction")
+        write = cell.repartition(max_files_per_cell).write.parquet
+        stage = stage_verified(spark, part_dir, write, cell.count())
+        install_verified(spark, part_dir, stage, cell.inputFiles())
         compacted += 1
     return compacted
-
-
-def _swap_cell_dir(fs, part_dir: str, tmp: str, read_files: set, cid: int, op: str) -> None:
-    """Count-verified staging → live swap for one cid= partition, with
-    a last-instant concurrent-writer guard: re-list the live dir and
-    abort (staging discarded, cell untouched) if any data file appeared
-    or vanished since the rewrite read its input — otherwise the delete
-    would silently destroy a file the rewrite never saw (ADVICE r8 #1).
-
-    ``fs`` is the sidecar filesystem for the index's path (r8: POSIX or
-    the JVM Hadoop layer — swaps run on any Hadoop filesystem; the
-    delete→rename window is atomic-rename-backed on HDFS/local and a
-    copy+delete emulation on object stores, where the documented
-    contract is cold-partition single-writer maintenance).
-    """
-    now_files = {
-        f for f in fs.list_names(part_dir) if not f.startswith(("_", "."))
-    }
-    if now_files != read_files:
-        fs.delete(tmp)
-        raise RuntimeError(
-            f"cell {cid} changed during {op} "
-            f"(files {sorted(read_files ^ now_files)} appeared/vanished); "
-            "aborted with the original partition untouched — stop the "
-            "writer (e.g. stream_append_ivf_index) and re-run"
-        )
-    fs.delete(part_dir)
-    fs.rename(tmp, part_dir)
 
 
 def recluster_ivf_index(spark: SparkSession, index_path: str, k: int = 8) -> None:
@@ -860,9 +794,9 @@ def recluster_ivf_index(spark: SparkSession, index_path: str, k: int = 8) -> Non
     cosine distance, fixed seed) and rewrite the index against the new
     centroids — closing the maintain→drift→recluster lifecycle loop.
 
-    The rewrite lands in a sibling tmp dir and is row-count-verified
-    before the swap (the warehouse rewrite discipline: a failed
-    recluster never destroys the serving index). After reclustering,
+    The rewrite goes through the verified whole-index rewrite
+    ``localfs.install_verified`` documents: a failed recluster never
+    destroys the serving index. After reclustering,
     the stored centroids are trained centers, not corpus exemplars, so
     searches must rank probes against the SIDECAR
     (``search_ivf_index(..., centroid_ids=None)``); post-recluster
@@ -875,15 +809,16 @@ def recluster_ivf_index(spark: SparkSession, index_path: str, k: int = 8) -> Non
     Float-layout indexes only (SQ8 codes lose the scale needed to
     retrain; keep the float twin as the training source).
     """
-    import os
-
     from pyspark.ml.clustering import KMeans
-
-    from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
-
-    fs = sidecar_fs(index_path, spark)
     from pyspark.ml.functions import array_to_vector
 
+    from currency_etl_pipeline_spark.sources.localfs import (
+        install_verified,
+        sidecar_fs,
+        stage_verified,
+    )
+
+    fs = sidecar_fs(index_path, spark)
     idx = spark.read.parquet(index_path)
     if "dv" not in idx.columns:
         raise ValueError("recluster_ivf_index requires the float (dv) layout")
@@ -901,22 +836,19 @@ def recluster_ivf_index(spark: SparkSession, index_path: str, k: int = 8) -> Non
         .filter(F.col("rn") == 1)
         .select("vec_id", "label", F.col("v").alias("dv"), "cid")
     )
-    tmp = index_path + "__recluster_tmp"
-    assigned.write.mode("overwrite").partitionBy("cid").parquet(tmp)
-    cents.write.mode("overwrite").parquet(_centroid_sidecar(tmp))
-    if spark.read.parquet(tmp).count() != n_before:
-        fs.delete(tmp)
-        raise RuntimeError("recluster row count mismatch; original index untouched")
-    # Carry the exactly-once commit markers across the swap: the
-    # rewrite renames every installed file, so a live stream's replay
-    # of a committed epoch must still find its marker, or it would
-    # append the batch a second time into the fresh layout.
-    commits, carried = os.path.join(index_path, "_commits"), os.path.join(tmp, "_commits")
-    fs.mkdirs(carried)
-    for name in fs.list_names(commits):
-        fs.copy_file(os.path.join(commits, name), os.path.join(carried, name))
-    fs.delete(index_path)
-    fs.rename(tmp, index_path)
+
+    def write(stage):
+        assigned.write.partitionBy("cid").parquet(stage)
+        cents.write.parquet(_centroid_sidecar(stage))
+        # Carry the exactly-once commit markers across the swap: the
+        # rewrite renames every installed file, so a live stream's
+        # replay of a committed epoch must still find its marker, or
+        # it would append the batch a second time into the new layout.
+        fs.mkdirs(f"{stage}/_commits")
+        for name in fs.list_names(f"{index_path}/_commits"):
+            fs.copy_file(f"{index_path}/_commits/{name}", f"{stage}/_commits/{name}")
+
+    install_verified(spark, index_path, stage_verified(spark, index_path, write, n_before))
 
 
 def recluster_flagged_cells(
@@ -931,7 +863,7 @@ def recluster_flagged_cells(
 
     ``recluster_ivf_index`` retrains and rewrites the WHOLE index; at
     100 TB that is a campaign, and the drift report exists precisely to
-    say "2 of 200 cells stopped fitting" (VERDICT r7 task 4). Per
+    say "2 of 200 cells stopped fitting". Per
     flagged cell this runs a local KMeans(k=2, cosine) over just that
     cell's population and picks one of two repairs:
 
@@ -946,17 +878,17 @@ def recluster_flagged_cells(
       cell id (max existing cid + 1), and the stored centroid of each
       half is refined to its exact sub-population mean — so the
       post-repair drift of both cells collapses toward 0 by
-      construction (one Lloyd refinement step). The old cid= partition
-      is rewritten through the same count-verified staging + re-list
-      guard as RTBF deletes (``_swap_cell_dir``); the new partition
-      lands by rename from an underscore-hidden staging dir.
+      construction (one Lloyd refinement step). Both halves are
+      staged and count-verified before either is installed, each
+      through ``localfs.install_verified`` (the old cid= partition
+      with its re-list guard).
     - **re-center** (still unimodal, the mean just moved — or the cell
       is too small to split): NO data files are touched; the sidecar
       centroid row is replaced with the cell's exact mean
       (``cell_mean_vectors``), which zeroes the drift for free.
 
-    The centroid sidecar is rewritten ONCE at the end (count-verified
-    staging + swap, k rows). Crash window: a crash after a cell swap
+    The centroid sidecar is rewritten ONCE at the end, through the same
+    verified rewrite (k rows). Crash window: a crash after a cell swap
     but before the sidecar rewrite leaves a ``cid=<new>`` partition the
     sidecar doesn't name — searches simply never probe it (recall
     degrades to the pre-split level for those members, nothing breaks);
@@ -970,7 +902,7 @@ def recluster_flagged_cells(
     the full-index KMeans never runs and unflagged partitions are never
     read beyond the one-row-per-file listing.
 
-    **SQ8 layout (r9, VERDICT r8 task 6)**: flagged cells of an int8
+    **SQ8 layout**: flagged cells of an int8
     index get the RE-CENTER repair only — sidecar-only, zero data
     files touched: the stored centroid is replaced with the cell's
     code-mean direction (the same L∞-normalized mean-direction proxy
@@ -991,14 +923,15 @@ def recluster_flagged_cells(
 
     Returns {cid: "split:<new_cid>" | "recentered"}.
     """
-    import os
-
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
+    from currency_etl_pipeline_spark.sources.localfs import (
+        install_verified,
+        sidecar_fs,
+        stage_verified,
+    )
 
-    fs = sidecar_fs(index_path, spark)
     cids = sorted({int(c) for c in cids})
     if not cids:
         return {}
@@ -1037,7 +970,6 @@ def recluster_flagged_cells(
             continue
         cell = spark.read.parquet(part_dir)  # (vec_id, label, dv)
         n = cell.count()
-        read_files = {os.path.basename(f) for f in cell.inputFiles()}
         mean = [
             float(x)
             for x in cell_mean_vectors(
@@ -1091,24 +1023,19 @@ def recluster_flagged_cells(
             r["cid"]: [float(x) for x in r["mv"]]
             for r in cell_mean_vectors(split.select("cid", "dv")).collect()
         }
-        tmp_keep = f"{index_path}/_split_tmp_keep{cid}"
-        tmp_new = f"{index_path}/_split_tmp_new{next_cid}"
-        split.filter(F.col("cid") == cid).drop("cid").write.mode(
-            "overwrite").parquet(tmp_keep)
-        split.filter(F.col("cid") == next_cid).drop("cid").write.mode(
-            "overwrite").parquet(tmp_new)
-        n_staged = (
-            spark.read.parquet(tmp_keep).count() + spark.read.parquet(tmp_new).count()
-        )
-        if n_staged != n:
-            fs.delete(tmp_keep)
-            fs.delete(tmp_new)
-            raise RuntimeError(
-                f"cell {cid} split staged {n_staged} rows, expected {n}; "
-                "original partition left untouched"
-            )
-        _swap_cell_dir(fs, part_dir, tmp_keep, read_files, cid, "partial recluster")
-        fs.rename(tmp_new, f"{index_path}/cid={next_cid}")
+        halves = {
+            c: split.filter(F.col("cid") == c).drop("cid").write.parquet
+            for c in (cid, next_cid)
+        }
+        new_dir = f"{index_path}/cid={next_cid}"
+        keep = stage_verified(spark, part_dir, halves[cid], sizes[cid])
+        try:
+            new = stage_verified(spark, new_dir, halves[next_cid], sizes[next_cid])
+        except RuntimeError:
+            sidecar_fs(index_path, spark).delete(keep)
+            raise
+        install_verified(spark, part_dir, keep, cell.inputFiles())
+        install_verified(spark, new_dir, new)
         cent_rows[cid] = means[cid]
         cent_rows[next_cid] = means[next_cid]
         actions[cid] = f"split:{next_cid}"
@@ -1117,22 +1044,8 @@ def recluster_flagged_cells(
         sorted(cent_rows.items()), "cid int, cv array<double>"
     )
     sidecar = _centroid_sidecar(index_path)
-    ctmp = f"{index_path}/_centroids_recluster_tmp"
-    new_cents.write.mode("overwrite").parquet(ctmp)
-    if spark.read.parquet(ctmp).count() != len(cent_rows):
-        fs.delete(ctmp)
-        raise RuntimeError("centroid sidecar rewrite count mismatch; sidecar untouched")
-    # Install via rename-aside, not delete-then-rename: a crash between
-    # a delete and the rename would leave the index with NO sidecar at
-    # all (every search fails until manual recovery — r9 ADVICE). With
-    # the aside, the worst crash window leaves the OLD sidecar at
-    # _centroids__old and the new one staged: recovery is "rename
-    # whichever exists back", never data loss.
-    old = sidecar + "__old"
-    fs.delete(old)  # clear any leftover from a previous crashed swap
-    fs.rename(sidecar, old)
-    fs.rename(ctmp, sidecar)
-    fs.delete(old)
+    stage = stage_verified(spark, sidecar, new_cents.write.parquet, len(cent_rows))
+    install_verified(spark, sidecar, stage)
     return actions
 
 

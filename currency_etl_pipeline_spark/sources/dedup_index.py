@@ -232,10 +232,14 @@ def _live(spark: SparkSession, index_path: str, rel: DataFrame) -> DataFrame:
 
 def compact_minhash_index(spark: SparkSession, index_path: str) -> int:
     """Apply accumulated tombstones physically: rewrite bands/sigs
-    without the deleted ids (tmp dir + count-verified swap, the same
-    never-destroy discipline as the warehouse rewrites), then drop the
-    tombstone relation. Returns the number of doc_ids applied."""
-    from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
+    without the deleted ids, each through the verified rewrite
+    ``localfs.install_verified`` documents, then drop the tombstone
+    relation. Returns the number of doc_ids applied."""
+    from currency_etl_pipeline_spark.sources.localfs import (
+        install_verified,
+        sidecar_fs,
+        stage_verified,
+    )
 
     fs = sidecar_fs(index_path, spark)
     t = _tombstones_path(index_path)
@@ -246,14 +250,8 @@ def compact_minhash_index(spark: SparkSession, index_path: str) -> int:
         path = os.path.join(index_path, sub)
         rel = spark.read.parquet(path)
         survivors = _live(spark, index_path, rel)
-        n_expect = survivors.count()
-        tmp = path + "__compact_tmp"
-        survivors.write.mode("overwrite").parquet(tmp)
-        if spark.read.parquet(tmp).count() != n_expect:
-            fs.delete(tmp)
-            raise RuntimeError(f"{sub} compaction count mismatch; original untouched")
-        fs.delete(path)
-        fs.rename(tmp, path)
+        stage = stage_verified(spark, path, survivors.write.parquet, survivors.count())
+        install_verified(spark, path, stage, rel.inputFiles())
     fs.delete(t)
     return n_ids
 

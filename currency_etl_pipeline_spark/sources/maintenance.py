@@ -1,5 +1,5 @@
 """One-call maintenance for the three persisted indexes — the loop an
-operator actually schedules (VERDICT r10 task 6).
+operator actually schedules.
 
 The pieces all exist and are individually pinned: the IVF vector index
 (sources/ann_index.py) and the SemDeDup admission index
@@ -26,9 +26,9 @@ only flagged cells; compaction touches only over-budget cells;
 tombstone compaction rewrites bands/sigs once. Nothing here scans a
 corpus — maintenance cost scales with damage, not with index size.
 
-Concurrency contract: same as the underlying pieces — compaction and
-split rewrites re-list cells before swapping and abort on interleaved
-appends (``_swap_cell_dir``), so a live streaming ingest makes the
+Concurrency contract: same as the underlying pieces — every rewrite
+swaps through ``localfs.install_verified``, whose re-list guard aborts
+on interleaved appends, so a live streaming ingest makes the
 maintenance pass fail loudly rather than lose rows. Schedule it the
 way the reference schedules its load (SURVEY §3 EP1): between ingest
 epochs.

@@ -29,6 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from currency_etl_pipeline_spark.operators.upsert import upsert_newest_wins, latest_per_key
+from currency_etl_pipeline_spark.sources.localfs import (
+    install_verified,
+    sidecar_fs,
+    stage_verified,
+)
 
 KEYS = ["base_currency", "target_currency"]
 
@@ -90,8 +95,6 @@ class SnapshotStore:
         ``hdfs://`` / object stores — pointer flips via the JVM
         FileContext rename; see sources/localfs.py for the object-store
         atomicity caveat)."""
-        from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
-
         self.spark = spark
         self.base = str(base)
         self._fs = sidecar_fs(self.base, spark)
@@ -219,6 +222,13 @@ class SnapshotStore:
         """Read a specific RETAINED version (time travel within the
         ``retain`` window). Raises for pruned/orphan versions with the
         same guards as ``rollback``."""
+        return self.spark.read.parquet(self._retained_dir(version))
+
+    def _retained_dir(self, version: int) -> str:
+        """The dir of a retained, fully written version. Raises
+        FileNotFoundError if it was pruned, or if it is an orphan of a
+        crashed commit (no ``_SUCCESS`` marker — a torn write that must
+        never be read or installed as the live snapshot)."""
         name = f"v{version:08d}"
         vdir = os.path.join(self.base, name)
         if not self._fs.is_dir(vdir):
@@ -227,9 +237,10 @@ class SnapshotStore:
             )
         if not self._fs.is_file(os.path.join(vdir, "_SUCCESS")):
             raise FileNotFoundError(
-                f"version {name} has no _SUCCESS marker — partially-written orphan"
+                f"version {name} has no _SUCCESS marker — partially-written "
+                "orphan from a crashed commit"
             )
-        return self.spark.read.parquet(vdir)
+        return vdir
 
     def diff(self, old_version: int, new_version: int, keys: list[str]) -> DataFrame:
         """CDC between two retained versions: (keys, change_type,
@@ -256,12 +267,10 @@ class SnapshotStore:
         pointer flip so no reader can still resolve to them), plus the
         CAS claim markers of pruned versions (a claim only coordinates
         its own slot; once the slot is behind the window it's inert)."""
-        for name in self._fs.list_names(self.base):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= live - self.retain:
-                self._fs.delete(os.path.join(self.base, name))
-        for name in self._fs.list_names(os.path.join(self.base, "_claims")):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= live - self.retain:
-                self._fs.delete(os.path.join(self.base, "_claims", name))
+        for d in (self.base, os.path.join(self.base, "_claims")):
+            for name in self._fs.list_names(d):
+                if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= live - self.retain:
+                    self._fs.delete(os.path.join(d, name))
 
     def rollback(self, version: int) -> None:
         """Flip the pointer back to a retained version (recovery after a
@@ -271,31 +280,12 @@ class SnapshotStore:
         orphan from a crashed commit (no ``_SUCCESS`` marker — the same
         torn-write scenario ``commit`` guards against must never be
         installed as the live snapshot)."""
-        name = f"v{version:08d}"
-        vdir = os.path.join(self.base, name)
-        if not self._fs.is_dir(vdir):
-            raise FileNotFoundError(
-                f"version {name} not on disk under {self.base} (pruned? raise retain)"
-            )
-        if not self._fs.is_file(os.path.join(vdir, "_SUCCESS")):
-            raise FileNotFoundError(
-                f"version {name} has no _SUCCESS marker — partially-written "
-                "orphan from a crashed commit; refusing to install it as live"
-            )
-        self._fs.write_text(self._pointer_path(), name)
+        self._retained_dir(version)
+        self._fs.write_text(self._pointer_path(), f"v{version:08d}")
 
 
 class Warehouse:
     def __init__(self, spark: SparkSession, base_path: str):
-        # All sidecar and directory-swap IO rides sidecar_fs (r8):
-        # POSIX for plain paths, the JVM Hadoop filesystem for URIs.
-        # Directory swaps are atomic-rename-backed on HDFS/local; on
-        # object stores the connector emulates rename as copy+delete —
-        # correct but non-atomic and O(data), so run maintenance on
-        # cold partitions there (or use a table format, the
-        # merge_into_available upgrade path).
-        from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
-
         self.spark = spark
         self.base = str(base_path)
         self._fs = sidecar_fs(self.base, spark)
@@ -450,26 +440,18 @@ class Warehouse:
         the natural clustering moment: the partition is cold, and the
         rewrite is already paid for.
 
-        Safety: the compacted copy is written to a sibling tmp dir and
-        row-count-verified BEFORE the old directory is removed — a
-        failed rewrite never destroys data. The final rm+rename is a
-        brief non-atomic window (documented: plain parquet dirs have
-        no pointer indirection; the SnapshotStore's versioned commit is
-        the atomic pattern, and on a lakehouse format this maps to
-        OPTIMIZE/rewrite_data_files which layer the same idea over a
-        transaction log). Run it when the partition is cold — i.e.
-        after its date has passed, which for an event-time-partitioned
-        history is every partition but today's.
+        The rewrite is count-verified and swapped in by
+        ``localfs.install_verified``, which states the protocol, its
+        crash states and the recovery rule. Run it when the partition is
+        cold, i.e. after its date has passed, which for an
+        event-time-partitioned history is every partition but today's.
         """
+        if cluster_by and zorder_by:
+            raise ValueError("cluster_by and zorder_by are mutually exclusive")
         part_dir = os.path.join(self.historical_path, f"rate_date={rate_date}")
         if not self._fs.is_dir(part_dir):
             raise FileNotFoundError(f"no partition dir {part_dir}")
-        files_before = [f for f in self._fs.list_names(part_dir) if f.endswith(".parquet")]
         df = self._read_partition(part_dir)
-        n_before = df.count()
-        tmp = part_dir + "__compact_tmp"
-        if cluster_by and zorder_by:
-            raise ValueError("cluster_by and zorder_by are mutually exclusive")
         if zorder_by:
             out = zorder_within_partitions(
                 df, list(zorder_by), coalesce_to=max(1, target_files)
@@ -478,18 +460,11 @@ class Warehouse:
             out = df.coalesce(max(1, target_files))
             if cluster_by:
                 out = out.sortWithinPartitions(*cluster_by)
-        out.write.mode("overwrite").parquet(tmp)
-        n_after = self.spark.read.parquet(tmp).count()
-        if n_after != n_before:
-            self._fs.delete(tmp)
-            raise RuntimeError(
-                f"compaction row count mismatch ({n_before} -> {n_after}); "
-                "original partition left untouched"
-            )
-        self._fs.delete(part_dir)
-        self._fs.rename(tmp, part_dir)
+        read = df.inputFiles()
+        stage = stage_verified(self.spark, part_dir, out.write.parquet, df.count())
+        install_verified(self.spark, part_dir, stage, read)
         files_after = [f for f in self._fs.list_names(part_dir) if f.endswith(".parquet")]
-        return (len(files_before), len(files_after))
+        return (len(read), len(files_after))
 
     def delete_current(self, keys_df: DataFrame) -> int:
         """DML DELETE on the snapshot: remove every key present in
@@ -515,10 +490,9 @@ class Warehouse:
         """Hard-delete matching rows from ONE date partition of the
         append-only history — the right-to-be-forgotten operation an
         append-only lake still must support. Rewrites the partition
-        WITHOUT the matching rows using the same
-        tmp-write → count-verify → swap machinery as
-        ``compact_historical`` (a failed rewrite never destroys data;
-        the deletion is verified exact: survivors == before − matches).
+        WITHOUT the matching rows through the same verified rewrite as
+        ``compact_historical`` (``localfs.install_verified``); the
+        staged count must be exactly survivors == before − matches.
         ``predicate`` is a Column over the partition's rows (the
         partition column itself is not present — it lives in the dir
         name). Returns the number of rows deleted. SQL DELETE
@@ -535,17 +509,11 @@ class Warehouse:
         n_match = df.filter(predicate).count()
         if n_match == 0:
             return 0
-        tmp = part_dir + "__delete_tmp"
-        df.filter(~predicate | predicate.isNull()).write.mode("overwrite").parquet(tmp)
-        n_after = self.spark.read.parquet(tmp).count()
-        if n_after != n_before - n_match:
-            self._fs.delete(tmp)
-            raise RuntimeError(
-                f"delete row count mismatch ({n_before} - {n_match} != {n_after}); "
-                "original partition left untouched"
-            )
-        self._fs.delete(part_dir)
-        self._fs.rename(tmp, part_dir)
+        survivors = df.filter(~predicate | predicate.isNull())
+        stage = stage_verified(
+            self.spark, part_dir, survivors.write.parquet, n_before - n_match
+        )
+        install_verified(self.spark, part_dir, stage, df.inputFiles())
         return n_match
 
     def _migrate_legacy_current(self) -> None:

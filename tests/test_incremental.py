@@ -1000,41 +1000,69 @@ def test_ivf_compaction_shrinks_cells_preserving_search(spark, sf_dir, tmp_path)
 
 
 def test_ivf_swap_aborts_if_cell_changed_under_rewrite(tmp_path):
-    """ADVICE r8 #1 (data-loss race): if a writer lands a file in a
-    cell between the rewrite's pinned listing and the swap, the swap
-    must abort — staging discarded, live cell (INCLUDING the unseen
-    file) untouched — instead of rmtree'ing data the rewrite never
-    read. Exercised directly on the swap primitive both maintenance
-    paths (compaction, RTBF delete) share."""
+    """Data-loss race: if a writer lands a file in a flat partition (an
+    IVF cell, a warehouse date partition) between the rewrite's pinned
+    listing and the swap, the swap must abort — staging discarded, live
+    dir (INCLUDING the unseen file) untouched — instead of deleting
+    data the rewrite never read. Exercised directly on the install
+    step every maintenance rewrite shares."""
     import os
 
     import pytest
 
-    from currency_etl_pipeline_spark.sources.ann_index import _swap_cell_dir
-    from currency_etl_pipeline_spark.sources.localfs import sidecar_fs
+    from currency_etl_pipeline_spark.sources.localfs import install_verified
 
-    fs = sidecar_fs(str(tmp_path))
-    part = tmp_path / "cid=3"
-    part.mkdir()
-    (part / "part-0.parquet").write_bytes(b"old0")
-    tmp = tmp_path / "_compact_tmp_cid3"
-    tmp.mkdir()
-    (tmp / "part-new.parquet").write_bytes(b"rewritten")
+    for name in ("cid=3", "rate_date=2024-03-01"):
+        part = tmp_path / name
+        part.mkdir()
+        (part / "part-0.parquet").write_bytes(b"old0")
+        tmp = tmp_path / f"_rewrite_{name.replace('=', '_')}"
+        tmp.mkdir()
+        (tmp / "part-new.parquet").write_bytes(b"rewritten")
 
-    # happy path: listing unchanged -> swap
-    _swap_cell_dir(fs, str(part), str(tmp), {"part-0.parquet"}, 3, "compaction")
-    assert os.listdir(part) == ["part-new.parquet"] and not tmp.exists()
+        # happy path: listing unchanged -> swap
+        install_verified(None, str(part), str(tmp), [str(part / "part-0.parquet")])
+        assert os.listdir(part) == ["part-new.parquet"] and not tmp.exists()
 
-    # racy path: a concurrent append landed part-1 after the read
-    tmp.mkdir()
-    (tmp / "part-new2.parquet").write_bytes(b"rewritten2")
-    (part / "part-1.parquet").write_bytes(b"concurrent-append")
-    with pytest.raises(RuntimeError, match="changed during compaction"):
-        _swap_cell_dir(
-            fs, str(part), str(tmp), {"part-new.parquet"}, 3, "compaction"
-        )
-    assert sorted(os.listdir(part)) == ["part-1.parquet", "part-new.parquet"]
-    assert not tmp.exists(), "staging dir must be discarded on abort"
+        # racy path: a concurrent append landed part-1 after the read
+        tmp.mkdir()
+        (tmp / "part-new2.parquet").write_bytes(b"rewritten2")
+        (part / "part-1.parquet").write_bytes(b"concurrent-append")
+        with pytest.raises(RuntimeError, match="changed during the rewrite"):
+            install_verified(None, str(part), str(tmp), [str(part / "part-new.parquet")])
+        assert sorted(os.listdir(part)) == ["part-1.parquet", "part-new.parquet"]
+        assert not tmp.exists(), "staging dir must be discarded on abort"
+
+
+def test_compact_historical_aborts_if_partition_changed_under_rewrite(
+    spark, tmp_path, monkeypatch
+):
+    """The warehouse rewrites share the re-list guard: a file appended to
+    the date partition after compact_historical read it must abort the
+    swap and survive, not be deleted unseen with the old files."""
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    wh = _rates_warehouse(spark, str(tmp_path / "wh"))
+    part = os.path.join(wh.historical_path, "rate_date=2024-03-01")
+    n_before = wh.historical().count()
+    late = os.path.join(part, "part-late.parquet")
+    first = sorted(f for f in os.listdir(part) if f.endswith(".parquet"))[0]
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        shutil.copy(os.path.join(part, first), late)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(RuntimeError, match="changed during"):
+        wh.compact_historical("2024-03-01")
+    monkeypatch.undo()
+    assert os.path.exists(late), "the concurrently appended file was deleted"
+    n_late = spark.read.parquet(late).count()
+    assert wh.historical().count() == n_before + n_late
 
 
 def test_ivf_partial_recluster_repairs_only_flagged_cells(spark, sf_dir, tmp_path):
@@ -1588,6 +1616,194 @@ def test_recluster_keeps_commit_markers(spark, sf_dir, tmp_path):
     n = spark.read.parquet(idx).count()
     assert append_ivf_index_exactly_once(spark, idx, tail, token="ns1-0") is False
     assert spark.read.parquet(idx).count() == n == v.count()
+
+
+_SWAP_POINTS = ("after_stage", "after_aside", "after_install")
+
+
+def _arm_swap_fault(monkeypatch, point, live):
+    """Make the next verified rewrite of ``live`` raise ``_Crash`` at
+    ``point``: after the stage write (before ``live`` moves), after
+    ``live`` → aside, or after stage → ``live`` (before the aside is
+    deleted). Only renames that touch ``live`` count."""
+    from currency_etl_pipeline_spark.sources import localfs
+
+    done = []
+
+    class _FaultyFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            if live not in (src, dst):
+                return self._fs.rename(src, dst)
+            if point == "after_stage":
+                raise _Crash(point)
+            self._fs.rename(src, dst)
+            done.append(dst)
+            if len(done) == _SWAP_POINTS.index(point):
+                raise _Crash(point)
+
+    real_fs = localfs.sidecar_fs
+    monkeypatch.setattr(
+        localfs, "sidecar_fs", lambda path, spark=None: _FaultyFS(real_fs(path, spark))
+    )
+
+
+def _crash_rewrite(spark, monkeypatch, point, root, build, live_of, rewrite, tables):
+    """Crash ``rewrite(path)`` at ``point`` of the swap of
+    ``live_of(path)``, called once, on the built copy before its rewrite.
+
+    While crashed, every whole-table read in ``tables(path)`` must keep
+    its column types and never double-count a row, and every row the
+    live dir held must still be in the live dir or in a new
+    ``_``-hidden sibling without ``=``. Then apply the recovery rule of
+    ``localfs.install_verified`` (live missing: rename the aside back;
+    else delete the aside), re-run the rewrite, and require the tables
+    and the live dir of a clean single run, with no sibling left over.
+    """
+    import os
+    import shutil
+    from collections import Counter
+
+    def rows(df):
+        return Counter(map(repr, df.collect()))
+
+    clean, crashed = f"{root}_clean", f"{root}_crashed"
+    build(clean)
+    rewrite(clean)
+    build(crashed)
+    live = live_of(crashed)
+
+    def state(path):
+        live_rows = rows(spark.read.parquet(os.path.join(path, os.path.relpath(live, crashed))))
+        return [rows(t) for t in tables(path)] + [live_rows]
+
+    parent, name = os.path.split(live)
+    before = [(rows(t), t.dtypes) for t in tables(crashed)]
+    live_rows = set(rows(spark.read.parquet(live)))
+    siblings = set(os.listdir(parent))
+
+    _arm_swap_fault(monkeypatch, point, live)
+    with pytest.raises(_Crash):
+        rewrite(crashed)
+    monkeypatch.undo()
+
+    for (want_rows, want_types), t in zip(before, tables(crashed)):
+        assert t.dtypes == want_types, f"crash {point} changed a column type"
+        assert not rows(t) - want_rows, f"crash {point} double-counted rows"
+    left = sorted(set(os.listdir(parent)) - siblings - {name})
+    assert all(d.startswith("_") and "=" not in d for d in left), left
+    kept = set()
+    for d in (name, *left):
+        if os.path.isdir(os.path.join(parent, d)):
+            kept |= set(rows(spark.read.parquet(os.path.join(parent, d))))
+    assert live_rows <= kept, f"crash {point} lost rows of the live dir"
+
+    aside = os.path.join(parent, "_aside_" + name.replace("=", "_"))
+    if os.path.exists(aside):
+        if os.path.exists(live):
+            shutil.rmtree(aside)
+        else:
+            os.rename(aside, live)
+    rewrite(crashed)
+    assert state(crashed) == state(clean), f"re-run after a crash {point} diverged"
+    assert set(os.listdir(parent)) == siblings, "the rewrite left a stage or aside behind"
+
+
+def _rates_warehouse(spark, path):
+    """A history with three append files in 2024-03-01 and one in
+    2024-03-02."""
+    import datetime as dt
+
+    from currency_etl_pipeline_spark.sources.warehouse import Warehouse
+
+    wh = Warehouse(spark, path)
+    for day, hours in ((1, (9, 12, 15)), (2, (12,))):
+        for h in hours:
+            ts = dt.datetime(2024, 3, day, h)
+            wh.append_historical(spark.createDataFrame(
+                [("GBP", "USD", 1.2 + h / 100, ts), ("GBP", "EUR", 1.1 + h / 100, ts)],
+                "base_currency string, target_currency string, rate double, timestamp timestamp",
+            ))
+    return wh
+
+
+@pytest.mark.parametrize("point", _SWAP_POINTS)
+def test_compact_historical_converges_after_swap_crash(spark, tmp_path, monkeypatch, point):
+    """A crash anywhere in compact_historical's swap leaves no staging
+    dir that reads parse as a rate_date value (a ``rate_date=…_tmp``
+    stage fails every registry-schema read with INVALID_PARTITION_VALUE
+    and makes a schema-less read double-count and turn rate_date into a
+    string), loses no row, and recovers to a clean run's history."""
+    import os
+
+    from currency_etl_pipeline_spark.sources.warehouse import Warehouse
+
+    def hist(p):
+        return os.path.join(p, "historical_rates")
+
+    _crash_rewrite(
+        spark, monkeypatch, point, str(tmp_path / "wh"),
+        lambda p: _rates_warehouse(spark, p),
+        lambda p: os.path.join(hist(p), "rate_date=2024-03-01"),
+        lambda p: Warehouse(spark, p).compact_historical("2024-03-01"),
+        lambda p: (Warehouse(spark, p).historical(), spark.read.parquet(hist(p))),
+    )
+
+
+@pytest.mark.parametrize("point", _SWAP_POINTS)
+def test_compact_ivf_converges_after_swap_crash(spark, sf_dir, tmp_path, monkeypatch, point):
+    """compact_ivf_index crashed in the swap of a fragmented cell: whole-
+    index reads stay exact or short, never doubled, and recovery plus a
+    re-run equals a clean compaction."""
+    from collections import Counter
+
+    from currency_etl_pipeline_spark.queries.vectors import _vecs
+    from currency_etl_pipeline_spark.sources.ann_index import (
+        append_ivf_index,
+        build_ivf_index,
+        compact_ivf_index,
+    )
+
+    v = _vecs(spark, sf_dir)
+
+    def build(p):
+        build_ivf_index(spark, sf_dir, p, CENTROID_IDS, vectors=v.filter(F.col("vec_id") < _SPLIT))
+        append_ivf_index(spark, p, v.filter(F.col("vec_id") >= _SPLIT))
+
+    def live_of(p):
+        files = Counter(f.split("/cid=")[1].split("/")[0] for f in _index_files(spark, p))
+        return f"{p}/cid={min(c for c, n in files.items() if n > 1)}"
+
+    _crash_rewrite(
+        spark, monkeypatch, point, str(tmp_path / "ivf"), build, live_of,
+        lambda p: compact_ivf_index(spark, p),
+        lambda p: (spark.read.parquet(p),),
+    )
+
+
+@pytest.mark.parametrize("point", _SWAP_POINTS)
+def test_centroid_sidecar_converges_after_swap_crash(spark, sf_dir, tmp_path, monkeypatch, point):
+    """recluster_flagged_cells' centroid-sidecar swap (SQ8 layout: a
+    re-center touches only the sidecar): the index never loses its
+    centroids to a crash, and recovery plus a re-run writes the clean
+    run's sidecar."""
+    from currency_etl_pipeline_spark.sources.ann_index import (
+        build_ivf_sq8_index,
+        recluster_flagged_cells,
+    )
+
+    _crash_rewrite(
+        spark, monkeypatch, point, str(tmp_path / "sq8"),
+        lambda p: build_ivf_sq8_index(spark, sf_dir, p, CENTROID_IDS),
+        lambda p: f"{p}/_centroids",
+        lambda p: recluster_flagged_cells(spark, p, [0, 1]),
+        lambda p: (spark.read.parquet(p),),
+    )
 
 
 def test_ivfpq_full_probe_equals_in_plan_pq(spark, sf_dir, tmp_path):
