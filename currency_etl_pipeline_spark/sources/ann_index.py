@@ -891,9 +891,11 @@ def recluster_flagged_cells(
     verified rewrite (k rows). Crash window: a crash after a cell swap
     but before the sidecar rewrite leaves a ``cid=<new>`` partition the
     sidecar doesn't name — searches simply never probe it (recall
-    degrades to the pre-split level for those members, nothing breaks);
-    recovery is re-running with the same flags after restoring the
-    split cell from its halves, or a full ``recluster_ivf_index``.
+    degrades to the pre-split level for those members, nothing breaks).
+    A re-run refuses such a partition, or a leftover aside, before
+    touching anything; recover by moving the partition's files back
+    into the split cell (and an aside per ``install_verified``), then
+    re-run with the same flags, or run a full ``recluster_ivf_index``.
     After any repair, searches must rank probes against the sidecar
     (``search_ivf_index(..., centroid_ids=None)``), exactly as after a
     full recluster.
@@ -927,6 +929,8 @@ def recluster_flagged_cells(
     from pyspark.ml.functions import array_to_vector
 
     from currency_etl_pipeline_spark.sources.localfs import (
+        _hidden_sibling,
+        _visible,
         install_verified,
         sidecar_fs,
         stage_verified,
@@ -949,6 +953,22 @@ def recluster_flagged_cells(
     if missing:
         raise ValueError(f"cids {missing} not in the index's centroid sidecar")
     next_cid = max(cent_rows) + 1
+    # Refuse a crashed earlier repair before changing anything: a
+    # partition the sidecar doesn't name would collide with a new cell,
+    # and a leftover aside would stop a swap only after cells moved.
+    fs = sidecar_fs(index_path, spark)
+    sidecar = _centroid_sidecar(index_path)
+    named = {f"cid={c}" for c in cent_rows}
+    rewritten = [sidecar, *(f"{index_path}/cid={c}" for c in cids)]
+    leftover = [d for d in _visible(fs.list_names(index_path)) if d not in named] + [
+        a for a in (_hidden_sibling(p, "aside") for p in rewritten) if fs.exists(a)
+    ]
+    if leftover:
+        raise RuntimeError(
+            f"{index_path} holds {leftover} from a crashed repair (a partition "
+            "the centroid sidecar doesn't name, or an aside); recover them "
+            "(see recluster_flagged_cells) and re-run"
+        )
     actions: dict[int, str] = {}
     for cid in cids:
         part_dir = f"{index_path}/cid={cid}"
@@ -1017,6 +1037,15 @@ def recluster_flagged_cells(
             cent_rows[cid] = mean
             actions[cid] = "recentered"
             continue
+        # The halves are verified against `sizes`, so check the plan
+        # itself kept every row of the live cell: duplicate or null
+        # vec_ids collapse in the per-vec_id ranking.
+        if sizes[cid] + sizes[next_cid] != n:
+            raise RuntimeError(
+                f"cell {cid} split assigned {sizes[cid] + sizes[next_cid]} "
+                f"rows, expected {n} (duplicate or null vec_id?); "
+                "original partition left untouched"
+            )
         # Refine stored centroids to the exact sub-population means so
         # drift(cid) and drift(next_cid) are ~0 post-repair.
         means = {
@@ -1032,10 +1061,10 @@ def recluster_flagged_cells(
         try:
             new = stage_verified(spark, new_dir, halves[next_cid], sizes[next_cid])
         except RuntimeError:
-            sidecar_fs(index_path, spark).delete(keep)
+            fs.delete(keep)
             raise
         install_verified(spark, part_dir, keep, cell.inputFiles())
-        install_verified(spark, new_dir, new)
+        install_verified(spark, new_dir, new, ())
         cent_rows[cid] = means[cid]
         cent_rows[next_cid] = means[next_cid]
         actions[cid] = f"split:{next_cid}"
@@ -1043,7 +1072,6 @@ def recluster_flagged_cells(
     new_cents = spark.createDataFrame(
         sorted(cent_rows.items()), "cid int, cv array<double>"
     )
-    sidecar = _centroid_sidecar(index_path)
     stage = stage_verified(spark, sidecar, new_cents.write.parquet, len(cent_rows))
     install_verified(spark, sidecar, stage)
     return actions

@@ -43,6 +43,7 @@ Atomicity caveats, documented once here:
 from __future__ import annotations
 
 import os
+import posixpath
 import shutil
 
 
@@ -331,8 +332,8 @@ def append_exactly_once(spark, index_path: str, token: str, write_stage) -> bool
 def _hidden_sibling(live: str, kind: str) -> str:
     """``<parent>/_<kind>_<name>`` with every ``=`` of ``live``'s name
     replaced by ``_`` — see :func:`install_verified` for why."""
-    parent, name = live.rstrip("/").rsplit("/", 1)
-    return f"{parent}/_{kind}_{name.replace('=', '_')}"
+    parent, name = posixpath.split(live.rstrip("/"))
+    return posixpath.join(parent, f"_{kind}_{name.replace('=', '_')}")
 
 
 def stage_verified(spark, live: str, write, rows: int) -> str:

@@ -1065,6 +1065,50 @@ def test_compact_historical_aborts_if_partition_changed_under_rewrite(
     assert wh.historical().count() == n_before + n_late
 
 
+def _flood_worst_cell(spark, idx, repeat=0):
+    """Append copies of the index's most peripheral member to its cell,
+    twice the cell's size, so the cell goes bimodal and a partial
+    recluster splits it — the same construction as the drift-report
+    test. The first ``repeat`` copies are appended again in a second
+    batch, repeating their vec_ids. Returns the cell id."""
+    from currency_etl_pipeline_spark.queries.vectors import cosine
+    from currency_etl_pipeline_spark.sources.ann_index import (
+        append_ivf_index,
+        load_index_centroids,
+    )
+
+    idx_df = spark.read.parquet(idx)
+    worst = (
+        idx_df.join(F.broadcast(load_index_centroids(spark, idx)), "cid")
+        .select("cid", "dv", cosine(F.col("dv"), F.col("cv")).alias("csim"))
+        .orderBy(F.col("csim").asc(), F.col("cid").asc())
+        .limit(1)
+        .collect()[0]
+    )
+    tcell, outlier = worst["cid"], list(worst["dv"])
+    n_copies = 2 * idx_df.filter(F.col("cid") == tcell).count()
+    # label matches the corpus column type (int) — the split rewrite
+    # materializes label, so a mixed-type append would corrupt the cell
+    copies = [(10_000 + i, outlier, 999) for i in range(n_copies)]
+    for batch in (copies, copies[:repeat]):
+        if batch:
+            append_ivf_index(spark, idx, spark.createDataFrame(
+                batch, "vec_id bigint, v array<double>, label int",
+            ).select("vec_id", "label", "v"))
+    return tcell
+
+
+def _tree(root):
+    """Every file under ``root``, hidden ones included, with its size."""
+    import os
+
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), os.path.getsize(os.path.join(d, f)))
+        for d, _dirs, files in os.walk(root)
+        for f in files
+    )
+
+
 def test_ivf_partial_recluster_repairs_only_flagged_cells(spark, sf_dir, tmp_path):
     """VERDICT r7 task 4: recluster_flagged_cells repairs EXACTLY the
     flagged cells. A cell flooded with copies of its own worst outlier
@@ -1078,41 +1122,16 @@ def test_ivf_partial_recluster_repairs_only_flagged_cells(spark, sf_dir, tmp_pat
     import os
 
     from currency_etl_pipeline_spark.queries.registry import all_queries
-    from currency_etl_pipeline_spark.queries.vectors import cosine
     from currency_etl_pipeline_spark.sources.ann_index import (
-        append_ivf_index,
         build_ivf_index,
         centroid_drift_report,
-        load_index_centroids,
         recluster_flagged_cells,
         search_ivf_index,
     )
 
     idx = str(tmp_path / "ivf_partial")
     build_ivf_index(spark, sf_dir, idx, CENTROID_IDS)
-
-    # Flood the most peripheral member's cell with copies of it — the
-    # same bimodal-drift construction as the drift-report test.
-    idx_df = spark.read.parquet(idx)
-    worst = (
-        idx_df.join(F.broadcast(load_index_centroids(spark, idx)), "cid")
-        .select("cid", "dv", cosine(F.col("dv"), F.col("cv")).alias("csim"))
-        .orderBy(F.col("csim").asc(), F.col("cid").asc())
-        .limit(1)
-        .collect()[0]
-    )
-    tcell, outlier = worst["cid"], list(worst["dv"])
-    n_copies = 2 * idx_df.filter(F.col("cid") == tcell).count()
-    # label matches the corpus column type (int) — the split rewrite
-    # materializes label, so a mixed-type append would corrupt the cell
-    append_ivf_index(
-        spark,
-        idx,
-        spark.createDataFrame(
-            [(10_000 + i, outlier, 999) for i in range(n_copies)],
-            "vec_id bigint, v array<double>, label int",
-        ).select("vec_id", "label", "v"),
-    )
+    tcell = _flood_worst_cell(spark, idx)
 
     total_before = spark.read.parquet(idx).count()
     drift_before = {
@@ -1202,6 +1221,66 @@ def test_ivf_partial_recluster_guards(spark, sf_dir, tmp_path):
     ).parquet(bogus)
     with pytest.raises(ValueError, match="dv.*or SQ8"):
         recluster_flagged_cells(spark, bogus, [0])
+
+
+def test_ivf_split_refuses_rows_lost_to_repeated_vec_ids(spark, sf_dir, tmp_path):
+    """A cell holding a repeated vec_id (a batch appended twice) must
+    not lose the repeat in a split: the per-vec_id assignment keeps one
+    row per vec_id, so the planned halves sum to less than the live
+    cell. The split raises before staging, and the index is unchanged."""
+    from currency_etl_pipeline_spark.sources.ann_index import (
+        build_ivf_index,
+        recluster_flagged_cells,
+    )
+
+    idx = str(tmp_path / "ivf_dup")
+    build_ivf_index(spark, sf_dir, idx, CENTROID_IDS)
+    tcell = _flood_worst_cell(spark, idx, repeat=1)
+    before = _tree(idx)
+    with pytest.raises(RuntimeError, match="rows, expected"):
+        recluster_flagged_cells(spark, idx, [tcell])
+    assert _tree(idx) == before
+
+
+@pytest.mark.parametrize("leftover", ["unnamed_cell", "sidecar_aside"])
+def test_ivf_split_refuses_crashed_repair_state(spark, sf_dir, tmp_path, leftover):
+    """A crashed earlier repair can leave a cid= partition the sidecar
+    doesn't name (a split whose sidecar rewrite never ran) or the
+    sidecar's aside. A split must refuse both before touching anything:
+    installing its new cell over that partition would delete its rows,
+    and a sidecar refusal after the cell swaps would strand them."""
+    import shutil
+
+    from currency_etl_pipeline_spark.sources.ann_index import (
+        build_ivf_index,
+        load_index_centroids,
+        recluster_flagged_cells,
+    )
+
+    idx = str(tmp_path / "ivf_left")
+    build_ivf_index(spark, sf_dir, idx, CENTROID_IDS)
+    tcell = _flood_worst_cell(spark, idx)
+    if leftover == "unnamed_cell":
+        nxt = max(r["cid"] for r in load_index_centroids(spark, idx).collect()) + 1
+        shutil.copytree(f"{idx}/cid={tcell}", f"{idx}/cid={nxt}")
+    else:
+        shutil.copytree(f"{idx}/_centroids", f"{idx}/_aside__centroids")
+    before = _tree(idx)
+    with pytest.raises(RuntimeError, match="crashed"):
+        recluster_flagged_cells(spark, idx, [tcell])
+    assert _tree(idx) == before
+
+
+def test_hidden_sibling_keeps_the_parent():
+    """Stage and aside names sit beside ``live`` for absolute, relative
+    and URI paths, start with ``_`` and hold no ``=``."""
+    from currency_etl_pipeline_spark.sources.localfs import _hidden_sibling
+
+    assert _hidden_sibling("idx", "rewrite") == "_rewrite_idx"
+    assert _hidden_sibling("/w/rates/rate_date=2024-03-01/", "aside") == (
+        "/w/rates/_aside_rate_date_2024-03-01"
+    )
+    assert _hidden_sibling("gs://b/idx/cid=3", "rewrite") == "gs://b/idx/_rewrite_cid_3"
 
 
 def test_ivf_sq8_partial_recluster_recenters(spark, sf_dir, tmp_path):
